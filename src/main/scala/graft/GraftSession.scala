@@ -75,34 +75,17 @@ object GraftSession {
   }
 
   def get(master: String, shufflePartitions: Int = 32): SparkSession = {
-    val b = builder(master, shufflePartitions)
-    // experiment hook (ScalingBench/IncProbe latency attribution): AQE stays
-    // the product default — its skew-join splitting is load-bearing at scale
-    sys.env.get("SPARK_GRAFT_AQE").foreach(v =>
-      b.config("spark.sql.adaptive.enabled", (v != "0").toString))
-    val s = b.getOrCreate()
+    val s = builder(master, shufflePartitions).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
-  }
-
-  /** Ensure graft_* SQL functions exist on a session we did not create (the
-    * driver's Verify/Bench sessions are built without extensions).
-    */
-  def ensureFunctions(spark: SparkSession): Unit = synchronized {
-    if (!spark.catalog.functionExists("graft_hash64")) {
-      // Re-register through the public extensions hook is not possible on a
-      // live session; fall back to the column API (no SQL names needed) —
-      // every internal pipeline uses graft.functions.gf, not SQL strings.
-      ()
-    }
   }
 
   /** Table loader for the driver-provided testdata directory — memoized per
     * (session, path): `spark.read.parquet` fires a schema-inference job at
     * CALL time, so a 46-query bench session re-reading `documents.parquet`
     * from dozens of query bodies would pay dozens of tiny driver jobs for
-    * the same immutable file (pure scheduling latency under load; the
-    * IncProbe job-site dump is where this showed up for the snapshot
+    * the same immutable file (pure scheduling latency under load; per-job
+    * call sites of an incremental snapshot showed it for the snapshot
     * store). The memo holds analyzed logical plans only — no pinned blocks,
     * a few KB per (session, table).
     */

@@ -18,10 +18,11 @@ object PlanDump {
     sb.append("`PushedFilters`/`ReadSchema` on scans, `WholeStageCodegen` spans\n")
     sb.append("around the graft expressions, broadcast vs shuffle joins, single\n")
     sb.append("exchange in the exact election, the bounded bucket-pair kernel\n")
-    sb.append("(r7: per-key stats as WINDOW aggregates over ONE exchange of the\n")
-    sb.append("probe stream; collect_set still only behind the cnt <= maxBucket\n")
-    sb.append("filter), the partitioned two-pass prefix scan, and the bounded\n")
-    sb.append("incremental probe (one tagged exchange, no unbounded join).\n")
+    sb.append("(r7: per-key stats as WINDOW aggregates; the static plan shows two\n")
+    sb.append("Exchanges of the probe stream, AQE stage reuse runs one; collect_set\n")
+    sb.append("still only behind the cnt <= maxBucket filter), the partitioned\n")
+    sb.append("two-pass prefix scan, and the bounded incremental probe (one\n")
+    sb.append("tagged stream, no unbounded join).\n")
 
     def dump(title: String, df: org.apache.spark.sql.DataFrame): Unit = {
       sb.append(s"\n## $title\n\n```\n")
@@ -33,17 +34,16 @@ object PlanDump {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     dump("pushdown + pruning (filtered projection on documents)",
       docs.filter(col("lang") === "en").select(col("doc_id"), length(col("text"))))
-    dump("features: shingles → minhash (one codegen'd projection)",
-      graft.dedup.MinHashLSH.features(docs, graft.dedup.DedupConfig()))
     dump("exact-dup election (single exchange, window min)",
       graft.dedup.ExactDedup.assignments(docs))
-    dump("LSH candidates (band keys → bucket agg → capped pairs → distinct)",
-      graft.dedup.MinHashLSH.candidatePairs(
-        graft.dedup.MinHashLSH.features(docs, graft.dedup.DedupConfig()),
-        graft.dedup.DedupConfig()))
+    dump("LSH candidates (fused features → band keys → bounded bucket pairs → distinct)", {
+      val cfg = graft.dedup.DedupConfig()
+      graft.dedup.MinHashLSH.pairsFromKeyRows(graft.dedup.MinHashLSH.bandKeyRows(
+        graft.dedup.MinHashLSH.featuresFused(docs, cfg), cfg), cfg)
+    })
     dump("fused features: shingles + minhash + simhash in ONE tokenization pass",
       graft.dedup.MinHashLSH.featuresFused(docs, graft.dedup.DedupConfig()))
-    dump("bounded bucket pairs (stats agg + same-key join; hot keys stream star edges)",
+    dump("bounded bucket pairs (per-key window stats; hot keys stream star edges)",
       graft.dedup.MinHashLSH.boundedBucketPairs(
         docs.select(pmod(col("doc_id"), lit(50)).as("key"), col("doc_id").as("e")),
         Seq("key"), 64))

@@ -206,25 +206,35 @@ object SparkEntry {
     pagesCorpus(s, dir) // the dump every build reads — create once, serial
     docs(s, dir); emb(s, dir); lineitem(s, dir) // prime schema inference
     Seq("customer", "orders", "events").foreach(GraftSession.table(s, dir, _))
-    val builds = prepBuilds(s, dir)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try {
-      val futs = builds.map { case (name, build) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            s.sparkContext.setJobDescription(s"session_prep: $name")
-            try build() finally s.sparkContext.setJobDescription(null)
-          }
-        })
-      }
-      futs.foreach(_.get()) // propagate the first failure
-    } finally pool.shutdown()
+    runBuildPool(prepBuilds(s, dir).map { case (name, build) => () => {
+      s.sparkContext.setJobDescription(s"session_prep: $name")
+      try build() finally s.sparkContext.setJobDescription(null)
+    }}, threads = 4)
   }
 
-  /** The individual prep builds, named (dev decomposition — PrepProbe).
-    * LONGEST-FIRST (probe-measured at sf0.1): the concurrent pool's critical
-    * path is the slowest build, so the heavy ones must enter the pool in the
-    * first wave, not after the small ones drain.
+  /** Run `builds` on a pool of `threads` driver threads and wait for all of
+    * them. The first failure cancels every queued build, interrupts the
+    * running ones, and is rethrown as the build's own exception.
+    */
+  private[graft] def runBuildPool(builds: Seq[() => Any], threads: Int): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    try builds.foreach(build => pool.execute(() =>
+      try build() catch { case t: Throwable =>
+        // shutdownNow from the failing worker itself: it drops the queue
+        // before this worker (or any other) can take another build
+        if (failure.compareAndSet(null, t)) pool.shutdownNow()
+      }))
+    catch { case _: java.util.concurrent.RejectedExecutionException => () } // one already failed
+    pool.shutdown()
+    pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+    Option(failure.get).foreach(t => throw t)
+  }
+
+  /** The individual prep builds, named (the name is each build's Spark job
+    * description). LONGEST-FIRST (measured at sf0.1): the concurrent pool's
+    * critical path is the slowest build, so the heavy ones must enter the
+    * pool in the first wave, not after the small ones drain.
     */
   private def prepBuilds(s: SparkSession, dir: String)
     : Seq[(String, () => Any)] = Seq(
@@ -237,19 +247,6 @@ object SparkEntry {
     "simhash_fps" -> (() => simhashFpsFrame(s, dir)),
     "mm_feats" -> (() => mmFeaturesFrame(s, dir)),
     "distinct_shingle_est" -> (() => distinctShingleEstFrame(s, dir)))
-
-  /** prepareSessionFrames with per-build wall seconds (PrepProbe). */
-  def prepareSessionFramesTimed(s: SparkSession, dir: String)
-    : Seq[(String, Double)] = {
-    val tc0 = System.nanoTime()
-    pagesCorpus(s, dir) // shared input dump — charged separately
-    val corpusSec = (System.nanoTime() - tc0) / 1e9
-    ("corpus_dump" -> corpusSec) +: prepBuilds(s, dir).map { case (name, build) =>
-      val t0 = System.nanoTime()
-      build()
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-  }
 
   /** One streaming near-dup drain per session — `pages_stream_neardup_pairs`
     * returns it and `pages_stream_neardup_clusters` clusters over it.
@@ -280,12 +277,12 @@ object SparkEntry {
     }
 
   /** Release a session's shared caches (ADVICE r5 #4): closes a pending
-    * pipeline — a one-consumer session (ad-hoc QueryProbe, partial verify)
-    * otherwise keeps its ~10⁸ B of persisted frames pinned for the session's
-    * lifetime waiting for the second named consumer — and forgets the
-    * memoized small frames so a long-lived session can rebuild fresh.
+    * pipeline — a one-consumer session (an ad-hoc single query, partial
+    * verify) otherwise keeps its ~10⁸ B of persisted frames pinned for the
+    * session's lifetime waiting for the second named consumer — and forgets
+    * the memoized small frames so a long-lived session can rebuild fresh.
     * The bench/verify sessions never need this (they run both pipeline
-    * consumers and end); dev mains call it before stop().
+    * consumers and end); a long-lived session calls it before stop().
     */
   def releaseSessionCaches(s: SparkSession): Unit = {
     pipelineCache.keySet.filter(_._1 eq s).foreach(k =>
@@ -502,10 +499,10 @@ object SparkEntry {
 
   /** The incremental query's two deterministic snapshots: snap0 = first n
     * docs; snap1 = n + n/10 docs with every 37th pre-existing doc revised.
-    * Shared by the driver query and IncProbe so the probe always profiles
-    * the benched workload. DERIVED from the session's corpus dump — a
-    * PagesGen row is a pure function of doc_id, so the first m ≤ pagesN
-    * rows of the dump ARE the m-doc corpus; no second generation pass.
+    * The oracle SQL re-derives the same slices. DERIVED from the session's
+    * corpus dump — a PagesGen row is a pure function of doc_id, so the
+    * first m ≤ pagesN rows of the dump ARE the m-doc corpus; no second
+    * generation pass.
     */
   def incSnapshots(s: SparkSession, dir: String, n: Long): (DataFrame, DataFrame) = {
     require(n + n / 10 <= pagesN(dir), s"inc snapshots need ${n + n / 10} docs")

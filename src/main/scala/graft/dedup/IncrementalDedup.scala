@@ -376,7 +376,7 @@ final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
       val nContents = (0 to snap).map(s => store.committedRows("content", s)).sum
       if (localDispatch &&
           nContents <= IncrementalDedup.LOCAL_PROBE_MAX_CONTENTS &&
-          nEdges <= ConnectedComponents.resolvedSmallMax) {
+          nEdges <= ConnectedComponents.SMALL_GRAPH_MAX) {
         import spark.implicits._
         val reg = registry.select(col("ckey"), col("content_id"))
           .as[(Long, Long)].collect()

@@ -11,42 +11,29 @@ import graft.functions.gf
   * elsewhere" generalizes to "Jaccard ≥ τ elsewhere".
   *
   * Scale shape (10¹²-doc design):
-  *   - one narrow features table (doc_id, sh, sig) — computed in one codegen'd
-  *     projection pass, no shuffle;
+  *   - one narrow features table (doc_id, sh, sig, sim64) — computed in one
+  *     codegen'd projection pass, no shuffle;
   *   - band explosion shuffles (band, bandHash, doc_id) triples only (24 B a
   *     row, not documents);
   *   - bucket groups emit pairs bounded by `maxBucket` (star edges beyond) —
   *     boilerplate-hot buckets cost O(bucket), never O(bucket²);
-  *   - candidate pairs deduped, then verified with a cheap signature-agreement
-  *     estimate before the exact shingle-set Jaccard is evaluated (the exact
-  *     compare runs only on rows surviving the estimate — Catalyst `If` is
-  *     lazy per row).
+  *   - candidate pairs deduped, then verified by exact shingle-set Jaccard.
   */
 object MinHashLSH {
 
-  /** (doc_id, sh, sig): distinct sorted shingle hashes + MinHash signature.
-    * Empty docs (no shingles) are excluded — they are exact dups of each
-    * other and are handled by ExactDedup.
-    */
-  def features(docs: DataFrame, cfg: DedupConfig,
-               idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs
-      // equivalent to size(shingles) > 0, but cheap and scan-pushable —
-      // filtering on size(sh) would get pushed through the projection by
-      // Catalyst and recompute the shingle kernel twice per row
-      .filter(length(trim(col(textCol))) > 0)
-      .select(
-        col(idCol).as("doc_id"),
-        gf.shingles(col(textCol), cfg.shingleK).as("sh")) // kernel normalizes
-      .withColumn("sig", gf.minhash(col("sh"), cfg.numPerm, cfg.seed))
-
   /** (doc_id, sh, sig, sim64) in ONE tokenization pass — the pipeline's
-    * feature table (a separate simhash pass would rescan and re-tokenize
-    * every text; memory traffic is the local-mode scaling ceiling).
+    * feature table: distinct sorted shingle hashes, MinHash signature and
+    * SimHash fingerprint (a separate simhash pass would rescan and
+    * re-tokenize every text; memory traffic is the local-mode scaling
+    * ceiling). Empty docs (no shingles) are excluded — they are exact dups
+    * of each other and are handled by ExactDedup.
     */
   def featuresFused(docs: DataFrame, cfg: DedupConfig,
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     docs
+      // equivalent to size(shingles) > 0, but cheap and scan-pushable —
+      // filtering on size(sh) would get pushed through the projection by
+      // Catalyst and recompute the shingle kernel twice per row
       .filter(length(trim(col(textCol))) > 0)
       .select(col(idCol).as("doc_id"),
         gf.featureStruct(col(textCol), cfg.shingleK, cfg.numPerm, cfg.seed).as("f"))
@@ -81,26 +68,31 @@ object MinHashLSH {
   def boundedBucketPairs(keyRows: DataFrame, keyCols: Seq[String],
                          maxBucket: Int): DataFrame = {
     val k = keyCols.map(col)
-    // CONTRACT: (key, e) rows should be unique — every caller's key family
-    // emits one row per (key, element) by construction (band hashes, block
-    // combinations, winnow positions, SRP table buckets). A violating
+    // CONTRACT: keys are non-null and (key, e) rows are unique — every
+    // caller's key family emits one non-null row per (key, element) by
+    // construction (band hashes, block combinations, winnow positions, SRP
+    // table buckets). Null keys are not dropped: Window.partitionBy groups
+    // them all into ONE bucket, which would pair unrelated rows. A violating
     // duplicate row can only DEMOTE its bucket to star edges early (cnt is
     // a row count — one shuffle; count_distinct would cost a second
     // (key,e)-keyed exchange of the full probe stream) and duplicate star
     // edges (callers dedup pairs); it can never produce self-pairs —
     // smallPairs aggregates a SET and the hot path filters e =!= mn.
     //
-    // r7 (guide §2.4): per-key stats come from WINDOW aggregates over ONE
-    // exchange of the probe stream, not a stats aggregation joined back —
-    // the r6 form exchanged the full stream twice (once into the partial
-    // agg, once for the join probe side) and scanned the feature subtree
-    // twice to feed them. The window's hash partitioning on the key also
-    // feeds smallPairs' groupBy exchange-free, so the whole kernel costs
-    // exactly one full-stream shuffle. Flood bound: WindowExec buffers one
-    // KEY GROUP at a time in a spillable row array (heap use capped by the
-    // spill threshold, a 10⁸-row boilerplate key costs sequential disk,
-    // never executor memory) — the hot path stays one-row-in/≤one-out after
-    // it, and collect_set still only runs behind the cnt ≤ maxBucket filter.
+    // r7 (guide §2.4): per-key stats come from WINDOW aggregates, not a
+    // stats aggregation joined back — the r6 form exchanged the full stream
+    // once into the partial agg and again for the join probe side, and
+    // scanned the feature subtree twice to feed them. The window's hash
+    // partitioning on the key also feeds smallPairs' groupBy exchange-free.
+    // The STATIC plan still holds two Exchanges of the probe stream, one
+    // under each union branch (plans/r07/kernel_bounded_bucket_pairs_after.txt);
+    // AQE query-stage reuse removes the second at runtime, so an executed
+    // run shuffles the stream once while a plan dump counts two.
+    // Flood bound: WindowExec buffers one KEY GROUP at a time in a spillable
+    // row array (heap use capped by the spill threshold, a 10⁸-row
+    // boilerplate key costs sequential disk, never executor memory) — the
+    // hot path stays one-row-in/≤one-out after it, and collect_set still
+    // only runs behind the cnt ≤ maxBucket filter.
     val w = org.apache.spark.sql.expressions.Window.partitionBy(k: _*)
     val joined = keyRows
       .withColumn("mn", min(col("e")).over(w))
@@ -142,8 +134,8 @@ object MinHashLSH {
   def boundedProbePairs(newRows: DataFrame, oldRows: DataFrame,
                         keyCols: Seq[String], maxBucket: Int): DataFrame = {
     val k = keyCols.map(col)
-    // same unique-(key, e) caller contract as boundedBucketPairs (the
-    // committed index tables hold one row per (content, key) by
+    // same non-null, unique-(key, e) caller contract as boundedBucketPairs
+    // (the committed index tables hold one row per (content, key) by
     // construction); disjointness ⇒ the counts add exactly.
     //
     // ONE tagged stream, ONE exchange: old∪new rows are tagged and shuffled
@@ -160,8 +152,10 @@ object MinHashLSH {
     // r7: per-key stats as WINDOW aggregates over the one tagged exchange
     // (see boundedBucketPairs) — the stats-agg + join-back form paid a
     // second full exchange of the tagged stream and a second scan of the
-    // index subtrees. Keys with no new arrival emit nothing (their old
-    // pairs surfaced when the newer member registered); singleton keys
+    // index subtrees. As in boundedBucketPairs, the static plan shows two
+    // Exchanges (plans/r07/kernel_bounded_probe_pairs_after.txt) and AQE
+    // stage reuse runs one. Keys with no new arrival emit nothing (their
+    // old pairs surfaced when the newer member registered); singleton keys
     // have no pair.
     val w = org.apache.spark.sql.expressions.Window.partitionBy(k: _*)
     val joined = tagged
@@ -306,10 +300,6 @@ object MinHashLSH {
       .filter(col("a") =!= col("b"))
       .distinct()
 
-  /** Candidate pairs (a < b) from LSH band buckets. */
-  def candidatePairs(features: DataFrame, cfg: DedupConfig): DataFrame =
-    pairsFromKeyRows(bandKeyRows(features, cfg), cfg)
-
   /** Verified near-dup pairs: (a, b, jac) with exact Jaccard >= cfg.tau.
     * Ships ONLY the int shingle sets through the pair joins — the exact
     * sorted-merge intersection on two ~300-int arrays is cheaper than
@@ -325,12 +315,5 @@ object MinHashLSH {
       .withColumn("jac", gf.jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jac") >= cfg.tau)
       .select(col("a"), col("b"), col("jac"))
-  }
-
-  /** Full LSH pass: docs → verified near-dup pairs. */
-  def nearDupPairs(docs: DataFrame, cfg: DedupConfig,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val feats = features(docs, cfg, idCol, textCol)
-    verifiedPairs(feats, candidatePairs(feats, cfg), cfg)
   }
 }

@@ -47,9 +47,4 @@ object SimHashDedup {
       .filter(gf.hamming(col("sim_a"), col("sim_b")) <= cfg.simhashMaxHamming)
       .select(col("a"), col("b"))
   }
-
-  /** Full pass: docs → Hamming-ball candidate pairs (a < b, distinct). */
-  def hammingPairs(docs: DataFrame, cfg: DedupConfig,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    candidatePairs(fingerprints(docs, idCol, textCol), cfg)
 }

@@ -4,12 +4,12 @@
 # the given sha, then alternates spark-submit Bench runs of A=<sha> and
 # B=HEAD, printing per-run totals and the min/median per side.
 #
-# Usage: tools/ab_bench.sh <baseline-sha> [pairs=3] [sfDir] [cpus]
+# Usage: tools/ab_bench.sh <baseline-sha> [pairs=3] [sfDir] [cpus=nproc]
 set -u
 SHA="${1:?usage: ab_bench.sh <baseline-sha> [pairs] [sfDir] [cpus]}"
 PAIRS="${2:-3}"
 SFDIR="${3:-/root/testdata/sf0.1}"
-CPUS="${4:-32}"
+CPUS="${4:-$(nproc)}"
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 WT="/tmp/ab_wt_$SHA"
 export SPARK_SCALA_VERSION=2.13 SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS="$CPUS"
